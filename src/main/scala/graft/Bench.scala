@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Path, Paths}
 
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -17,6 +17,19 @@ object Bench {
     // plan gate now (unpartWindows fact + allowlist); at runtime it
     // only buries real warnings in the bench tail (VERDICT r14 item 4)
     graft.plans.PlanGate.silenceBoundedWindowWarn()
+    val (fullPath, fullJson, line) = run(spark, sfDir, cpus, SparkEntry.queries)
+    Files.writeString(fullPath, fullJson + "\n")
+    println(line)
+    spark.stop()
+  }
+
+  /** One bench pass over `queries` (warmup, timed pass, rewarm,
+    * shared-cold): returns the artifact path, the full artifact JSON
+    * and the bounded stdout line; writing is left to the caller. The
+    * query map is a parameter so a spec can inject a failing id. */
+  def run(spark: SparkSession, sfDir: String, cpus: String,
+      queries: Map[String, (SparkSession, String) => DataFrame])
+      : (Path, String, String) = {
     // untimed warmup: spin executor threads, load parquet footers and
     // codegen paths so the first timed query isn't charged for JVM start
     Tables.names.foreach { t =>
@@ -36,9 +49,9 @@ object Bench {
     // does its own work.
     val warmupQueries = Seq("q_scan_parquet", "q_join_inner_smj",
       "q_sql_revenue_by_nation", "q_agg_hash", "q_win_rownum", "q_fn_string")
-      .filter(SparkEntry.queries.contains)
+      .filter(queries.contains)
     warmupQueries.foreach { name =>
-      try SparkEntry.queries(name)(spark, sfDir).count()
+      try queries(name)(spark, sfDir).count()
       catch { case _: Throwable => () }
     }
     // Shared shingle/trigram-pair cache fill, UNTIMED but REPORTED
@@ -53,7 +66,7 @@ object Bench {
     // over its steady state.
     val fillS = {
       val t0 = System.nanoTime()
-      try SparkEntry.queries.get("q_llm_ngram_jaccard")
+      try queries.get("q_llm_ngram_jaccard")
         .foreach(_(spark, sfDir).count())
       catch { case _: Throwable => () }
       (System.nanoTime() - t0) / 1e9
@@ -88,41 +101,51 @@ object Bench {
     // name-sorted: Map iteration order shifts whenever the query set
     // changes, which reshuffles which query pays shared-cache warmup —
     // stable ordering keeps per-query numbers comparable across rounds.
-    val ordered = SparkEntry.queries.keys.toSeq.sorted
+    val ordered = queries.keys.toSeq.sorted
+    // FAIL LOUD: a query that throws in any pass is named on stderr and
+    // in `failed_ids` (stdout line and artifact), and is dropped from
+    // value, steady_total, the rewarm set and shared_cold: the time to
+    // a throw is not a query's cost.
+    val failed = scala.collection.mutable.LinkedHashSet[String]()
+    def timed(name: String)(body: => Unit): Option[Double] = {
+      val t0 = System.nanoTime()
+      try { body; Some((System.nanoTime() - t0) / 1e9) }
+      catch { case e: Throwable =>
+        System.err.println(s"Bench: $name failed: $e")
+        failed += name
+        None
+      }
+    }
     // Shared-cache self-reporting (r19, VERDICT r18 item "steady for
     // cached ids measures lookups"): a query is flagged `cached` when
     // its construction touches a CacheScope.shared* site, or when its
-    // plan reads an InMemoryRelation without having registered any
-    // cache itself (a plan-equality freerider on another id's shared
-    // fill). Flag only — timing methodology unchanged; the flagged ids
+    // plan reads an InMemoryRelation (a plan-equality freerider on
+    // another id's shared fill — query-local caches are drained before
+    // the plan is inspected, so only shared relations remain). Flag
+    // only — timing methodology unchanged; the flagged ids
     // additionally get a true shared-cold re-run below.
     val sharedCached = scala.collection.mutable.ArrayBuffer[String]()
-    val results = ordered.zipWithIndex.map { case (name, i) =>
-      val fn = SparkEntry.queries(name)
+    val timedPass = ordered.zipWithIndex.flatMap { case (name, i) =>
       val shared0 = CacheScope.sharedEvents
-      val local0 = CacheScope.localEvents
-      var df: org.apache.spark.sql.DataFrame = null
-      val t0 = System.nanoTime()
-      try { df = fn(spark, sfDir); df.count() } catch { case _: Throwable => -1L }
-      val dt = (System.nanoTime() - t0) / 1e9
+      var df: DataFrame = null
+      val dt = timed(name) { df = queries(name)(spark, sfDir); df.count() }
       // query-local caches; outside the timed region — BLOCKING so the
       // async block removal can't compete with the next timed query
       CacheScope.drain(blocking = true)
-      val sharedTouched = CacheScope.sharedEvents > shared0
-      val localTouched = CacheScope.localEvents > local0
-      val inmem = if (df == null) 0
-        else try graft.plans.PlanGate.facts(df).inMemoryScans
-        catch { case _: Throwable => 0 }
-      if (sharedTouched || (inmem > 0 && !localTouched)) sharedCached += name
+      if (dt.isDefined) {
+        val sharedTouched = CacheScope.sharedEvents > shared0
+        val inmem = try graft.plans.PlanGate.facts(df).inMemoryScans
+          catch { case _: Throwable => 0 }
+        if (sharedTouched || inmem > 0) sharedCached += name
+      }
       if ((i + 1) % SentinelEvery == 0) sentinelSamples += sentinelPass()
-      name -> dt
+      dt.map(name -> _)
     }
     sentinelSamples += sentinelPass()
     // explicit ROOT locale: the f-interpolator honors the JVM default
     // locale, and a comma-decimal default (e.g. de_DE) would emit
     // "49,900" and corrupt both the stdout line and BENCH_FULL.json
     def sec(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", v)
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     // Diagnostic second pass over the slow queries: separates
     // one-shot cost (plan analysis + codegen + JIT + cache fill) from
     // steady-state compute. r02 evidence: on the driver machine the
@@ -139,11 +162,11 @@ object Bench {
     // manual sweep at all. Floor of 8 keeps cross-round continuity;
     // the threshold keys off the MEDIAN (robust to the slow tail).
     val medianDt = {
-      val ts = results.map(_._2).sorted
+      val ts = timedPass.map(_._2).sorted
       if (ts.isEmpty) 0.0 else ts(ts.size / 2)
     }
     val rewarmNames = {
-      val byCost = results.sortBy(-_._2)
+      val byCost = timedPass.sortBy(-_._2)
       val over = byCost.filter(_._2 > 4.0 * medianDt).map(_._1)
       (over ++ byCost.take(8).map(_._1)).distinct
     }
@@ -155,20 +178,19 @@ object Bench {
     // such a rewarm re-runs twice more and records the MEDIAN, with
     // the raw spread annotated in-run so divergence is visible in the
     // artifact instead of needing an after-the-fact idle-VM sweep.
-    val singleByName = results.toMap
-    val rewarm = rewarmNames.map { name =>
-      def pass(): Double = {
-        val t0 = System.nanoTime()
-        try { SparkEntry.queries(name)(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        val dt = (System.nanoTime() - t0) / 1e9
+    val singleByName = timedPass.toMap
+    val rewarmPass = rewarmNames.flatMap { name =>
+      def pass(): Option[Double] = {
+        val dt = timed(name)(queries(name)(spark, sfDir).count())
         CacheScope.drain(blocking = true)
         dt
       }
-      val p1 = pass()
-      if (p1 <= singleByName.getOrElse(name, Double.MaxValue)) (name, p1, Seq.empty[Double])
-      else {
-        val ps = Seq(p1, pass(), pass()).sorted
-        (name, ps(1), ps)
+      pass().flatMap { p1 =>
+        if (p1 <= singleByName(name)) Some((name, p1, Seq.empty[Double]))
+        else for (p2 <- pass(); p3 <- pass()) yield {
+          val ps = Seq(p1, p2, p3).sorted
+          (name, ps(1), ps)
+        }
       }
     }
     // one sample after the rewarm phase too: the rewarm medians feed
@@ -181,15 +203,17 @@ object Bench {
     // Runs AFTER everything that feeds value/steady_total and is
     // excluded from both (clearly outside the headline); ids are
     // re-drained individually so no id inherits a sibling's fill.
-    val sharedCold = sharedCached.toSeq.sorted.map { name =>
+    val sharedCold = sharedCached.toSeq.sorted.flatMap { name =>
       CacheScope.drainShared(blocking = true)
       CacheScope.drain(blocking = true)
-      val t0 = System.nanoTime()
-      try { SparkEntry.queries(name)(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      val dt = (System.nanoTime() - t0) / 1e9
+      val dt = timed(name)(queries(name)(spark, sfDir).count())
       CacheScope.drain(blocking = true)
-      name -> dt
+      dt.map(name -> _)
     }
+    // an id that threw in a later pass leaves every timed column
+    val results = timedPass.filterNot(r => failed(r._1))
+    val rewarm = rewarmPass.filterNot(r => failed(r._1))
+    val total = results.map(_._2).sum
     val sharedColdS = sharedCold.map(_._2).sum
     val sentinelDrift = NoiseSentinel.drift(sentinelSamples.toSeq)
     val sentinelRobust = NoiseSentinel.robustDrift(sentinelSamples.toSeq)
@@ -222,6 +246,7 @@ object Bench {
       .map("\"" + _ + "\"").mkString("[", ",", "]")
     val sharedColdJson = sharedCold
       .map { case (k, v) => "\"" + k + "\":" + sec(v) }.mkString("{", ",", "}")
+    val failedJson = failed.toSeq.map("\"" + _ + "\"").mkString("[", ",", "]")
     val fullJson = "{\"metric\":\"total\",\"value\":" + sec(total) +
       ",\"unit\":\"sec\",\"sf\":\"" + sfDir + "\"" +
       ",\"cpus\":" + cpusJson +
@@ -234,6 +259,7 @@ object Bench {
       ",\"cached_ids\":" + cachedJson +
       ",\"shared_cold\":" + sharedColdJson +
       ",\"shared_cold_s\":" + sec(sharedColdS) +
+      ",\"failed_ids\":" + failedJson +
       ",\"queries\":" + results.map { case (k, v) => "\"" + k + "\":" + sec(v) }
         .mkString("{", ",", "}") +
       ",\"steady\":" + steady.map { case (k, v) => "\"" + k + "\":" + sec(v) }
@@ -263,7 +289,6 @@ object Bench {
       else if (sfName == "sf0.1") s"BENCH_FULL_c$cpus.json"
       else s"/tmp/BENCH_FULL_${sfName}_c$cpus.json")
     val fullPath = Paths.get(outName).toAbsolutePath
-    Files.writeString(fullPath, fullJson + "\n")
     // The stdout line must survive the driver's tail capture (VERDICT
     // r12 item 2): the harness keeps only the LAST ~2000 chars of
     // output, and in every round r01–r12 the inline line overflowed
@@ -276,15 +301,16 @@ object Bench {
     val qs = topSteady.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + sec(v) }
       .mkString("{", ",", "}")
     val restSec = steadyTotal - topSteady.map(_._2).sum
-    println(s"""{"metric":"total","value":${sec(total)},"unit":"sec",""" +
-      s""""n_queries":${results.size},"steady_total":${sec(steadyTotal)},""" +
+    val line = s"""{"metric":"total","value":${sec(total)},"unit":"sec",""" +
+      s""""n_queries":${ordered.size},"steady_total":${sec(steadyTotal)},""" +
       s""""queries":$qs,""" +
-      s""""rest_n":${results.size - topSteady.size},"rest_sec":${sec(restSec)},""" +
+      s""""rest_n":${steady.size - topSteady.size},"rest_sec":${sec(restSec)},""" +
       s""""fill_s":${sec(fillS)},"rewarm_n":${rewarm.size},""" +
       s""""cached_n":${sharedCached.size},"shared_cold_s":${sec(sharedColdS)},""" +
       s""""cpus":$cpusJson,""" +
       s""""sentinel_drift":${sec(sentinelDrift)},"sentinel_robust_drift":${sec(sentinelRobust)},"sentinel_tier":"$sentinelTier","contaminated":$contaminated,""" +
-      s""""full":"$fullPath","sf":"$sfDir"}""")
-    spark.stop()
+      s""""failed_ids":$failedJson,""" +
+      s""""full":"$fullPath","sf":"$sfDir"}"""
+    (fullPath, fullJson, line)
   }
 }

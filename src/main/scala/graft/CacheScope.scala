@@ -31,18 +31,15 @@ import org.apache.spark.storage.StorageLevel
 object CacheScope {
   private val live = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
   private val sharedLive = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
-  // Monotonic call counters (r19, VERDICT r18 next-item 3): Bench
-  // diffs these around each timed query to self-report which ids
-  // construct (or re-read) a shared family cache vs a query-local one
-  // — the steady map annotation that distinguishes lookup cost from
-  // query cost in the artifact.
+  // Monotonic call counter (r19, VERDICT r18 next-item 3): Bench
+  // diffs it around each timed query to self-report which ids
+  // construct (or re-read) a shared family cache — the steady map
+  // annotation that distinguishes lookup cost from query cost in the
+  // artifact.
   private var sharedEventCount = 0L
-  private var localEventCount = 0L
   def sharedEvents: Long = synchronized(sharedEventCount)
-  def localEvents: Long = synchronized(localEventCount)
 
   def local[T](ds: Dataset[T]): Dataset[T] = synchronized {
-    localEventCount += 1
     if (ds.storageLevel == StorageLevel.NONE) ds.cache()
     live += ds; ds
   }

@@ -62,8 +62,8 @@ import org.apache.spark.sql.functions._
   * bias (quantization loses dot-product energy), so the near-dup
   * pair scan filters at (threshold − margin) on SDC scores and
   * exact-reranks only the survivor band against the full vectors —
-  * precision 1.0 by construction, recall measured under the
-  * CrossoverProbe protocol (CROSSOVER_PQ rows) and oracle-gated in
+  * precision 1.0 by construction, recall measured against the exact
+  * pair set (BASELINE.md CROSSOVER_PQ rows) and oracle-gated in
   * q_llm_embed_neardup_pq_gate.
   */
 object AnnPq {
@@ -86,7 +86,7 @@ object AnnPq {
   /** (vec_id, sub, sv) — each prepared row split into `m` contiguous
     * subvectors. Zero shuffle: an explode over sequence(0, m−1) plus
     * a per-row slice; dsub derives from size(embedding) so no
-    * hardcoded dimensionality (the CrossoverProbe lesson). */
+    * hardcoded dimensionality. */
   def subvectors(emb: DataFrame, m: Int): DataFrame = {
     val dsub = (size(col("embedding")) / m).cast("int")
     emb.select(col("vec_id"),
@@ -175,21 +175,6 @@ object AnnPq {
     * reduction that is PQ's entire point at scale. The TRUE L2 norm
     * rides along exact (the standard PQ trick: quantization error
     * stays in the dot product only, never in the normalizer). */
-  /** Encode under FROZEN codebooks (r18, for AnnIvf.appendToIndex on
-    * a persisted PQ index): assign each subvector to its nearest
-    * existing codebook entry — no training, one broadcast join —
-    * then pack. `emb` must carry (vec_id, embedding, nrm); `m` must
-    * match the books' layout ([[requireCodeLayout]] guards the pack).
-    * The ingest-time twin of the frozen coarse quantizer: codes for
-    * pre-existing rows never move, the batch is ADC-servable
-    * immediately, and the books retrain on [[AnnIvf.rebuildIndex]]'s
-    * cadence, not per batch. */
-  def encodeWithBooks(spark: SparkSession, emb: DataFrame,
-      books: DataFrame, m: Int, ksub: Int): DataFrame = {
-    requireCodeLayout(m, ksub)
-    encodeWith(assignCodes(spark, subvectors(emb, m), books), emb)
-  }
-
   def encodeWith(assigned: DataFrame, emb: DataFrame): DataFrame =
     assigned
       .groupBy(col("vec_id"), expr("sub div 8").as("word"))
@@ -267,8 +252,8 @@ object AnnPq {
     graft.functions.PqOps.adcDot(spark, tflat, p, ksub)
 
   /** ALL-PAIRS approximate near-duplicate retrieval — the PQ
-    * counterpart of AnnLsh/AnnIvf.neardupPairs, measured under the
-    * same CrossoverProbe protocol. Three stages, each cheaper-per-row
+    * counterpart of AnnLsh/AnnIvf.neardupPairs, measured against the same
+    * exact pair set. Three stages, each cheaper-per-row
     * than the last is wide:
     *
     *   1. candidates: sign-LSH band buckets (the measured-best

@@ -132,11 +132,6 @@ object KMeans {
     (cents, asg)
   }
 
-  /** The n·k assignment pass against an ALREADY-TRAINED centroid
-    * table — public so AssignDuel can time the pass on a shared model
-    * without re-paying the train (r14). */
-  def assignTo(e: DataFrame, cents: DataFrame): DataFrame = assign(e, cents)
-
   /** Nearest-centroid assignment: broadcast the k centroid rows
     * (centroid norms computed once on the tiny side), cosine rounded
     * to 6 dp, argmax via one order-independent max(struct) partial

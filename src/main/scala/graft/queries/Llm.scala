@@ -137,28 +137,29 @@ object Llm {
     * ~25 s/query (linear fit through both measured points) and the
     * corpus tops the single-node cache budget — past that the
     * probe-limited form is the only shape that bounds per-query work,
-    * and its real win is the persisted index's PARTITION PRUNING
-    * (AnnIvf.topKFromIndex reads only nprobe cell directories), not
-    * the in-memory dot cut. BASELINE.md §r14 records the duel table.
+    * and its real win is a persisted index's PARTITION PRUNING
+    * (reading only nprobe cell directories), not the in-memory dot
+    * cut. BASELINE.md §r14 records the duel table.
     *
-    * r15 — the IO side MEASURED (IndexServeDuel; bytes from the
+    * r15 — the IO side MEASURED on a persisted cell-partitioned index
+    * (since removed: no query served from it; bytes from the
     * scan's own post-pruning filesSize metric, walls from the
     * review-corrected symmetric-timer protocol): per query at
     * n = 20k / 200k / 1M the exact scan reads 5.0 / 49.9 / 250.1 MiB
     * (linear in n, as it must) while the fixed-nprobe=8 index reads
     * 0.3 / 0.9 / 2.0 MiB (√n — nprobe·n/cells at cells=⌈√n⌉). In the
     * WARM serving shape (lists relation + centroid table reused
-    * across queries — what a deployment and probeCandidatesFromIndex
-    * amortize) the wall follows the bytes: 0.100 → 0.113 s/query
-    * near-flat from 20k to 200k (r16, through the public
-    * AnnIvf.openIndex handle: 0.139 → 0.147 s/query at 200k → 1M —
-    * the flat law holds to 1M rows), ~6× under the exact scan's 0.64 s
-    * and widening linearly with n. Constructing a fresh DataFrame PER
-    * QUERY instead pays an O(cells) listing + a centroid job that
-    * dominates locally (1.12 s at 200k) — the serving win requires
-    * the amortized shape, and the envelope remains an operational
-    * bound on the CACHED in-memory scan, not a crossover claim
-    * (BASELINE §r15 carries the full corrected table). */
+    * across queries — what a deployment amortizes) the wall follows
+    * the bytes: 0.100 → 0.113 s/query near-flat from 20k to 200k
+    * (r16, through a reusable serving handle: 0.139 → 0.147 s/query
+    * at 200k → 1M — the flat law holds to 1M rows), ~6× under the
+    * exact scan's 0.64 s and widening linearly with n. Constructing
+    * a fresh DataFrame PER QUERY instead pays an O(cells) listing + a
+    * centroid job that dominates locally (1.12 s at 200k) — the
+    * serving win requires the amortized shape, and the envelope
+    * remains an operational bound on the CACHED in-memory scan, not
+    * a crossover claim (BASELINE §r15 carries the full corrected
+    * table). */
   val TopKScanEnvelope = 10000000L
 
   /** Pair budget for the PINNED-k semdedup oracle anchor (r14): its
@@ -343,7 +344,7 @@ object Llm {
     * scores, and ONLY the ≤ (3+slack)·n survivor edges re-attach full
     * vectors for the exact-cosine final top-3. Slack absorbs SDC
     * misranking (quantization error can swap near-ties); the edge
-    * recall gate (≥ 0.90, AutoScaleProbe knnpq step) is the accuracy
+    * recall gate (≥ 0.90, measured at x10/x30 in r12) is the accuracy
     * contract. At cluster scale this is the n^1.7 candidate volume
     * moving at 1/4 the bytes (64 B codes vs 256 B floats at m=64).
     *
@@ -1099,11 +1100,10 @@ object Llm {
       .distinct()
     // THE family cache sits here, on the scored-but-unfiltered
     // relation (VERDICT r8 item 2): q_llm_minhash_pr aggregates it
-    // directly and re-collects it in ScaleProbe, and the verified
-    // (jaccard ≥ 0.5) consumers filter it in-memory — one
-    // materialization of the band join + verify serves the whole
-    // minhash family instead of the ~22 s flat double traversal the
-    // r8 ScaleProbe recorded. Bounded: banded candidates only
+    // directly, and the verified (jaccard ≥ 0.5) consumers filter it
+    // in-memory — one materialization of the band join + verify
+    // serves the whole minhash family instead of the ~22 s flat
+    // double traversal the r8 ScaleProbe recorded. Bounded: banded candidates only
     // (near-dup mass + band collisions), never all-pairs.
     graft.CacheScope.shared(cand
       .join(sh.select($"doc_id".as("doc_a"), $"shingles".as("sh_a")), "doc_a")
@@ -1615,9 +1615,7 @@ object Llm {
     // emitted. The WHOLE chain (iterative Lloyd fit included) runs
     // identically in DuckDB, so a hash match certifies the serving
     // semantics — probe ranking, cell membership, scoring, threshold
-    // — not just the spec-pinned engine form (AnnIvf.probeCandidates
-    // is the same relation with the float kernel + literal-array
-    // centroid ship for streams). Probe ranking at 6 dp with cell
+    // — not just an engine-side form. Probe ranking at 6 dp with cell
     // tiebreak and θ applied to the ROUNDED cosine: cross-engine
     // rank/filter determinism by construction. Candidate work is
     // nprobe/k of the corpus per query — never a full scan.
@@ -1705,8 +1703,8 @@ object Llm {
     // dispatch — exact graph inside the 1M-row envelope (this corpus:
     // oracle-checked hash-exact, same twin as q_llm_knn_graph), auto-
     // config grow-bits LSH graph past it (AutoDispatchSpec pins the
-    // ANN branch ≡ the configurable graph builder; AutoScaleProbe
-    // measures its x10/x30 walls + sampled edge recall ≥ 0.90).
+    // ANN branch ≡ the configurable graph builder; its x10/x30 walls
+    // and sampled edge recall ≥ 0.90 were measured in r12).
     "q_llm_knn_graph_auto" -> ((s, d) =>
       knnGraphAuto(s, d).orderBy(col("vec_id"), col("rk"))),
 
@@ -1732,13 +1730,10 @@ object Llm {
     // load_ratio = occupancy / mean occupancy. max(load_ratio)
     // drifting up over ingest means the frozen quantizer no longer
     // fits the data distribution (hot lists stop bounding per-query
-    // probe work) and a retrain is due; the persisted-index twin of
-    // this audit (AnnIvf.occupancyAudit, which additionally splits
-    // live/tombstoned) is spec-pinned to agree with the lists on
-    // disk. Plan: the SAME hash-checked Lloyd fit as q_llm_kmeans,
-    // one k-group partial aggregate, and a 1-row total broadcast —
-    // audit cost is one narrow corpus pass at any scale, output is
-    // k rows.
+    // probe work) and a retrain is due. Plan: the SAME hash-checked
+    // Lloyd fit as q_llm_kmeans, one k-group partial aggregate, and a
+    // 1-row total broadcast — audit cost is one narrow corpus pass at
+    // any scale, output is k rows.
     "q_llm_ivf_occupancy" -> ((s, d) => {
       import s.implicits._
       val occ = kmeansFitPinned(s, d)

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** THE clone-scale corpus construction, shared by every probe/duel
+/** THE clone-scale embedding construction, kept in one place
   * (r15 review: six tools and a spec carried verbatim copies, and one
   * copy diverged — a planted-id range collided with clone 90's id
   * space and corrupted a measurement. The id-space contract now lives
@@ -12,31 +12,23 @@ import org.apache.spark.sql.functions._
   * Embeddings: clone c of vector v gets vec_id = v + c·[[IdKey]], and
   * its values are the deterministic rotation + sign-flip perturbation
   * (element i ← element (i + 7c) mod dims, sign from xxhash64(c, i))
-  * — cross-copy cosines pseudo-random, not 1.0 (the CrossoverProbe
-  * requirement). Documents: doc_id shift + per-copy token suffix, so
-  * copies are shingle-disjoint and every per-shingle df is preserved.
+  * — cross-copy cosines pseudo-random, not 1.0, so the clones are
+  * not exact duplicates of each other.
   *
   * ID-SPACE CONTRACT: base ids are < [[IdKey]] and mult ≤ 100, so
   * every clone id is < 100·IdKey = 10⁹. Anything a caller PLANTS on
-  * top (ε-copies, probes) must use ids ≥ [[PlantFloor]]. A caller
-  * that plants NOTHING may raise the cap explicitly via `maxMult`
-  * (ADVICE r15: IndexServeDuel's n=1M point needs mult=500; with no
-  * planted ids the only hard bound is Long overflow, and even
-  * mult=200 stays under PlantFloor). The default cap stays 100 so a
-  * planting caller must consciously opt out of the collision guard. */
+  * top (ε-copies, probes) must use ids ≥ [[PlantFloor]]. */
 object CloneCorpus {
   val IdKey = 10000000L
   val PlantFloor = 2000000000L
 
   /** The clone-scaled embedding relation (not yet written): mult
     * copies of `src`'s embeddings under the contract above. */
-  def embeddingsDf(spark: SparkSession, src: String, mult: Int,
-      maxMult: Int = 100): DataFrame = {
+  def embeddingsDf(spark: SparkSession, src: String, mult: Int): DataFrame = {
     import spark.implicits._
-    require(mult >= 1 && mult <= maxMult,
-      s"CloneCorpus: mult=$mult outside 1..$maxMult — past the default " +
-      s"cap clone ids cross PlantFloor=$PlantFloor and collide with " +
-      "planted ids; raise maxMult ONLY if this corpus plants no ids")
+    require(mult >= 1 && mult <= 100,
+      s"CloneCorpus: mult=$mult outside 1..100 — the id-space contract " +
+      s"keeps clone ids well under PlantFloor=$PlantFloor")
     val dims = graft.Tables.embeddings(spark, src)
       .select(size(col("embedding"))).head().getInt(0)
     val clones = spark.range(mult).select($"id".cast("int").as("c"))
@@ -48,28 +40,5 @@ object CloneCorpus {
             when(pmod(xxhash64($"c", i), lit(2)) === 0, 1.0).otherwise(-1.0))
             .cast("float"))).as("embedding"),
       $"label")
-  }
-
-  /** Write [[embeddingsDf]] to `dir`/embeddings.parquet (32 files)
-    * and return `dir`. */
-  def writeEmbeddings(spark: SparkSession, src: String, mult: Int,
-      dir: String, maxMult: Int = 100): String = {
-    embeddingsDf(spark, src, mult, maxMult).repartition(32)
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    dir
-  }
-
-  /** The clone-scaled documents relation: doc_id shift + per-copy
-    * token suffix (copies shingle-disjoint, dfs preserved). */
-  def documentsDf(spark: SparkSession, src: String, mult: Int): DataFrame = {
-    import spark.implicits._
-    require(mult >= 1 && mult <= 100, s"CloneCorpus: mult=$mult outside 1..100")
-    val clones = spark.range(mult).select($"id".cast("int").as("c"))
-    graft.Tables.documents(spark, src).crossJoin(clones).select(
-      ($"doc_id" + $"c".cast("long") * IdKey).as("doc_id"),
-      when($"c" === 0, $"text").otherwise(concat_ws(" ",
-        transform(split($"text", " "),
-          t => concat(t, lit("_"), $"c".cast("string"))))).as("text"),
-      $"lang", $"source", $"n_chars")
   }
 }

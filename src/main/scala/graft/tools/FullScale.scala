@@ -10,24 +10,22 @@ import org.apache.spark.sql.functions._
   * tables, referential integrity preserved) and run the ENTIRE
   * `SparkEntry.queries` surface once at x1 and once at xK, printing
   * rows + wall per query — the measurement that converts "survives
-  * 100× by plan shape" from an argument into a sweep. ScaleProbe's
-  * x1/x2/x4 covers 49 ops with per-op growth laws; this tool's job is
-  * BREADTH: catch any accidentally super-linear query among the rest.
+  * 100× by plan shape" from an argument into a sweep. Its job is
+  * BREADTH: catch any accidentally super-linear query.
   *
-  * Synthesis rules (the probes' established spellings):
+  * Synthesis rules:
   *  - region/nation: static (TPC-H dims don't scale with SF);
   *  - customer/supplier/part/orders/lineitem: key shift c·10⁷ applied
   *    CONSISTENTLY across referencing columns (o_custkey moves with
   *    c_custkey, l_orderkey with o_orderkey, …) so join cardinalities
-  *    scale honestly; p_brand gets a per-copy suffix (ScaleProbe —
-  *    keeps edit-distance blocks within copies);
+  *    scale honestly; p_brand gets a per-copy suffix (keeps
+  *    edit-distance blocks within copies);
   *  - events: user_id +c·10⁶, event_id +c·100000800 (multiple of 3600
-  *    ⇒ geo fix positions preserved per copy — InvarCheck/ScaleProbe);
+  *    ⇒ geo fix positions preserved per copy);
   *  - documents: doc_id shift + per-copy token suffix (copies are
-  *    shingle-disjoint ⇒ dedup structure per copy — ScaleProbe);
+  *    shingle-disjoint ⇒ dedup structure per copy);
   *  - embeddings: vec_id shift + deterministic rotation/sign
-  *    perturbation (cross-copy cosines pseudo-random, not 1.0 —
-  *    CrossoverProbe).
+  *    perturbation (cross-copy cosines pseudo-random, not 1.0).
   *
   * Expected growth classes (anything else needs a fix or a written
   * explanation in BASELINE.md): flat (global stats, top-k limits,

@@ -27,6 +27,10 @@ class ContractSpec extends AnyFunSuite {
       s"undeclared engine-only: ${qs -- os}")
   }
 
+  test("flagship entry() returns rows on sf0.001") {
+    assert(SparkEntry.entry(spark).count() > 0)
+  }
+
   test("no declared query outputs array/map-typed columns (driver harness cannot hash them)") {
     // CORRECTNESS_r01: pandas sort_values crashes on ndarray cells —
     // three queries lost their green rows to this. Array ops must end
