@@ -218,7 +218,10 @@ object Bench {
     val sentinelDrift = NoiseSentinel.drift(sentinelSamples.toSeq)
     val sentinelRobust = NoiseSentinel.robustDrift(sentinelSamples.toSeq)
     val contaminated = NoiseSentinel.contaminated(sentinelSamples.toSeq)
-    val sentinelTier = NoiseSentinel.tier(sentinelSamples.toSeq)
+    // a failed id makes the whole run's tier "failed", whatever the
+    // host did; the sentinel block keeps the host's own verdict
+    val sentinelTier =
+      if (failed.nonEmpty) "failed" else NoiseSentinel.tier(sentinelSamples.toSeq)
     val sentinelJson = NoiseSentinel.json(sentinelSamples.toSeq, sec)
     val rewarmJson = rewarm.map { case (k, v, _) => "\"" + k + "\":" + sec(v) }
       .mkString("{", ",", "}")
@@ -253,6 +256,7 @@ object Bench {
       ",\"steady_total\":" + sec(steadyTotal) +
       ",\"fill_s\":" + sec(fillS) +
       ",\"sentinel\":" + sentinelJson +
+      ",\"sentinel_tier\":\"" + sentinelTier + "\"" +
       ",\"rewarm\":" + rewarmJson +
       ",\"rewarm_spread\":" + spreadJson +
       ",\"warmup\":" + warmupJson +

@@ -3,6 +3,7 @@ package graft.streaming
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.UUID
 import java.util.concurrent.atomic.AtomicLong
 
 import com.fasterxml.jackson.databind.ObjectMapper
@@ -28,12 +29,15 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * Kafka producer write plays in the reference (main.go:126-136):
   * ingest ack decoupled from processing, at-least-once handoff,
   * restart-safe (files persist; the stream's checkpoint tracks which
-  * are consumed). Two deliberate divergences, both documented
-  * pipeline-wide: structurally-valid-but-incomplete bodies are
-  * accepted here and dead-lettered downstream (the reference forwards
-  * them with zero values), and production-scale deployments still
-  * front with Kafka (SURVEY §2.1) — a single-host spool is an edge
-  * ingress, not a 100 TB bus.
+  * are consumed). A 200 ack means the record has been renamed into
+  * the spool, not fsynced: it survives a crash of this process, not
+  * of the OS. Spool files are never removed. Two deliberate
+  * divergences, both documented pipeline-wide:
+  * structurally-valid-but-incomplete bodies are accepted here and
+  * dead-lettered downstream (the reference forwards them with zero
+  * values), and production-scale deployments still front with Kafka
+  * (SURVEY §2.1) — a single-host spool is an edge ingress, not a
+  * 100 TB bus.
   */
 object HttpIngress {
 
@@ -52,14 +56,21 @@ object HttpIngress {
     StructField("addr", StringType),
     StructField("json", StringType)))
 
-  private val seq = new AtomicLong(0L)
+  private val ListingThreshold =
+    "spark.sql.sources.parallelPartitionDiscovery.threshold"
 
   /** Start the endpoint. `port = 0` binds an ephemeral port (tests);
-    * the reference hard-codes 7575 (main.go:193). */
+    * the reference hard-codes 7575 (main.go:193). Spool files are
+    * named `fix-<start token>-<n>.json`: the token is fresh for every
+    * start, so an endpoint restarted on the same spool never reuses a
+    * name (a reused name would overwrite the earlier fix, and the file
+    * source skips names it has already read). */
   def start(spoolDir: String, port: Int = 0): Endpoint = {
     val dir = Paths.get(spoolDir)
     Files.createDirectories(dir)
     val mapper = new ObjectMapper()
+    val token = UUID.randomUUID().toString
+    val seq = new AtomicLong(0L)
     val server = HttpServer.create(new InetSocketAddress(port), 0)
     server.createContext("/location", (exchange: HttpExchange) => {
       try {
@@ -73,7 +84,8 @@ object HttpIngress {
             // the reference's only gate: json.Decode error → 400
             respond(exchange, 400, "Invalid JSON\n")
           case Some(tree) =>
-            spool(dir, mapper.writeValueAsString(tree),
+            spool(dir, s"$token-${seq.incrementAndGet()}",
+              mapper.writeValueAsString(tree),
               exchange.getRemoteAddress.toString.stripPrefix("/"), mapper)
             respond(exchange, 200, "")
         }
@@ -89,16 +101,15 @@ object HttpIngress {
     * file source never observes a partial file, canonicalized to a
     * single line so the (default, splittable) JSON-lines reader parses
     * it — bodies may legally contain newlines. */
-  private def spool(dir: Path, canonicalJson: String, addr: String,
-      mapper: ObjectMapper): Unit = {
+  private def spool(dir: Path, name: String, canonicalJson: String,
+      addr: String, mapper: ObjectMapper): Unit = {
     val rec = mapper.createObjectNode()
     rec.put("addr", addr)
     rec.put("json", canonicalJson)
-    val n = seq.incrementAndGet()
-    val tmp = dir.resolve(s".tmp-$n")
+    val tmp = dir.resolve(s".tmp-$name")
     Files.write(tmp, (mapper.writeValueAsString(rec) + "\n")
       .getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, dir.resolve(s"fix-$n.json"),
+    Files.move(tmp, dir.resolve(s"fix-$name.json"),
       StandardCopyOption.ATOMIC_MOVE)
   }
 
@@ -110,9 +121,25 @@ object HttpIngress {
   }
 
   /** Tail the spool as a stream — plugs directly into
-    * Pipeline.ingressToEnvelope / ingressWithDeadLetter. */
-  def spoolStream(spark: SparkSession, spoolDir: String): DataFrame =
+    * Pipeline.ingressToEnvelope / ingressWithDeadLetter.
+    *
+    * Each micro-batch's getBatch resolves the batch's named files; past
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) paths
+    * Spark does that with a listing job of one task per file, about
+    * 3–4 ms a file on 4 cores (seconds for a burst batch of 1k+ files),
+    * where a check on the Spark driver costs about 0.1 ms a file — and
+    * the driver already lists the whole spool serially in latestOffset
+    * on every trigger. So the threshold is raised to `Int.MaxValue` here.
+    * The setting is SESSION-WIDE: it applies to every later file read
+    * of `spark`. The engine's own parquet reads pass one root path and
+    * so are unaffected (only a root holding more than 32 partition
+    * directories would now be listed on the driver too). A caller who
+    * sets the threshold explicitly keeps their value. */
+  def spoolStream(spark: SparkSession, spoolDir: String): DataFrame = {
+    if (!spark.conf.getAll.contains(ListingThreshold))
+      spark.conf.set(ListingThreshold, Int.MaxValue.toString)
     spark.readStream.schema(spoolSchema).json(spoolDir)
+  }
 
   /** Batch read of the spool (backfill / test assertions). */
   def spoolRead(spark: SparkSession, spoolDir: String): DataFrame =

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, udf}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Bench fails loud: a query that throws is named in `failed_ids` and
-  * never timed into the headline. */
+/** Bench fails loud: a query that throws is named in `failed_ids`,
+  * never timed into the headline, and turns the run's tier "failed". */
 class BenchSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -24,8 +24,10 @@ class BenchSpec extends AnyFunSuite {
         if (x >= 0) throw new IllegalStateException("injected"); true
       }.apply(col("id"))).toDF()))
     val (_, full, line) = Bench.run(spark, TestSpark.sf, "4", queries)
-    for (json <- Seq(full, line))
+    for (json <- Seq(full, line)) {
       assert(field(json, "failed_ids") == "[\"q_boom\"]")
+      assert(field(json, "sentinel_tier") == "\"failed\"")
+    }
     // artifact: single-pass and steady maps hold only the surviving id
     assert(field(full, "value") == field(field(full, "queries"), "q_ok"))
     assert(field(full, "steady_total") == field(field(full, "steady"), "q_ok"))
