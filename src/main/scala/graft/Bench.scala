@@ -290,7 +290,13 @@ object Bench {
     val sfName = Paths.get(sfDir).getFileName.toString
     val outName = sys.env.getOrElse("GRAFT_BENCH_OUT",
       if (sfName == "sf0.1" && cpus == "32") "BENCH_FULL.json"
-      else if (sfName == "sf0.1") s"BENCH_FULL_c$cpus.json"
+      else if (sfName == "sf0.1") {
+        // SPARK_GRAFT_CPUS defaults to 4, so a canonical run that forgot
+        // it would otherwise leave a stale BENCH_FULL.json unnoticed
+        System.err.println(s"Bench: SPARK_GRAFT_CPUS=$cpus is not the canonical 32, so this " +
+          s"sf0.1 run writes BENCH_FULL_c$cpus.json, not BENCH_FULL.json")
+        s"BENCH_FULL_c$cpus.json"
+      }
       else s"/tmp/BENCH_FULL_${sfName}_c$cpus.json")
     val fullPath = Paths.get(outName).toAbsolutePath
     // The stdout line must survive the driver's tail capture (VERDICT

@@ -21,8 +21,8 @@ import org.apache.spark.sql.DataFrame
   * at-least-once in exactly that window. True exactly-once requires
   * the sink's write and the ledger commit to share one transaction —
   * that variant is implemented: [[JdbcOutboxSink]] commits the data
-  * rows and a (batch_id, part_id) ledger row atomically per
-  * partition (the classic transactional outbox; JdbcSinkSpec kills a
+  * rows and their (batch_id, part_id) ledger rows atomically per
+  * write task (the classic transactional outbox; JdbcSinkSpec kills a
   * task inside the window this class cannot close and proves zero
   * duplicates). Alternatively an inner sink that is itself idempotent
   * per (batchId, row) needs no ledger at all ([[JdbcUpsertSink]]).

@@ -360,13 +360,27 @@ object Pipeline {
     }
   }
 
-  /** Wire a stage to a sink with exactly-once checkpointing. */
+  private val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** Wire a stage to a sink with exactly-once checkpointing.
+    *
+    * Checkpoint logs are written through [[LocalCheckpointFileManager]]:
+    * on a local checkpoint it skips the process forks Hadoop's local file
+    * system makes per write without its native library (three log writes
+    * per micro-batch). The setting is SESSION-WIDE: every streaming
+    * query later started on `stage`'s session, state stores included,
+    * uses that class. A caller who set
+    * `spark.sql.streaming.checkpointFileManagerClass` keeps their value. */
   def start(stage: DataFrame, sink: RowSink, checkpoint: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+    val conf = stage.sparkSession.conf
+    if (!conf.getAll.contains(CheckpointManagerKey))
+      conf.set(CheckpointManagerKey, classOf[LocalCheckpointFileManager].getName)
     stage.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch((df: DataFrame, id: Long) => sink.write(df, id))
       .start()
+  }
 }

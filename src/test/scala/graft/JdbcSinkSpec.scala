@@ -96,45 +96,112 @@ class JdbcSinkSpec extends AnyFunSuite {
 
   test("JdbcOutboxSink: a crash between data insert and ledger commit re-delivers NOTHING twice") {
     // VERDICT r3 item 6 — the transactional-outbox exactly-once proof:
-    // kill one partition's task AFTER its data inserts, BEFORE its
-    // ledger insert; the transaction must roll back atomically, the
-    // other partitions' commits must stand, and the restart must
-    // deliver every row exactly once.
+    // kill the task holding bucket 2 AFTER its data inserts, BEFORE its
+    // ledger inserts; its transaction must roll back atomically, the
+    // other tasks' commits must stand, and the restart must deliver
+    // every row exactly once. Adaptive coalescing would pack this small
+    // batch into one task, so it is off here: one task per shuffle
+    // partition.
+    TestSpark.withSQLConf("spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      val conn = java.sql.DriverManager.getConnection(url)
+      conn.createStatement().execute(
+        "CREATE TABLE outbox_data (k INT, v DOUBLE)")
+      conn.close()
+      def ledgerRows(batchId: Long): Long = {
+        val c = java.sql.DriverManager.getConnection(url)
+        try {
+          val st = c.prepareStatement(
+            "SELECT count(*) FROM graft_outbox_ledger WHERE batch_id = ?")
+          st.setLong(1, batchId)
+          val rs = st.executeQuery(); rs.next(); rs.getLong(1)
+        } finally c.close()
+      }
+      def await(cond: => Boolean): Unit = {
+        val deadline = System.nanoTime() + 30L * 1000000000L
+        while (!cond && System.nanoTime() < deadline) Thread.sleep(10)
+      }
+      val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val hookKey = "outbox-crash-once"
+      graft.streaming.JdbcOutboxSink.crashHooks(hookKey) = (batchId, pid) =>
+        if (pid == 2 && crashed.compareAndSet(false, true)) {
+          // let another task commit first: a task still queued or
+          // writing when this one fails is killed with the job
+          await(ledgerRows(batchId) > 0)
+          throw new RuntimeException("injected crash: after data, before ledger")
+        }
+      val sink = new graft.streaming.JdbcOutboxSink(url, "outbox_data",
+        numPartitions = 4, crashHookKey = Some(hookKey))
+      val batch = (1 to 100).map(i => (i, i * 0.5)).toDF("k", "v")
+
+      intercept[Exception] { sink.write(batch, 7L) } // the "process death"
+      assert(crashed.get, "crash hook never fired")
+      // the failed job's other tasks may still be committing
+      val tracker = spark.sparkContext.statusTracker
+      await(tracker.getExecutorInfos.map(_.numRunningTasks).sum == 0)
+      val afterCrash = spark.read.jdbc(url, "outbox_data", props)
+      // bucket 2's task rolled back with its ledger rows — no orphans —
+      // while another task's commit stands
+      assert(afterCrash.count() < 100, "crashed partition's rows leaked past rollback")
+      assert(afterCrash.count() > 0, "no other task's commit stood")
+
+      sink.write(batch, 7L) // restart replays the same batchId
+      val after = spark.read.jdbc(url, "outbox_data", props)
+      assert(after.count() == 100)
+      assert(after.select("K").distinct().count() == 100, "a committed partition re-delivered")
+
+      sink.write(batch, 7L) // full-batch replay: every partition skips
+      assert(spark.read.jdbc(url, "outbox_data", props).count() == 100)
+      sink.write(batch.filter($"k" <= 10), 8L) // a NEW batch still appends
+      assert(spark.read.jdbc(url, "outbox_data", props).count() == 110)
+
+      // retention (VERDICT r5 item 6): prune ledger rows below batch 8;
+      // batch 8, inside the retention window, must still skip on replay
+      assert(sink.pruneLedger(8L) > 0, "batch-7 ledger rows not pruned")
+      sink.write(batch.filter($"k" <= 10), 8L)
+      assert(spark.read.jdbc(url, "outbox_data", props).count() == 110,
+        "a batch inside the retention window re-delivered after pruning")
+    }
+  }
+
+  test("JdbcOutboxSink replays a batch that per-partition ledgers partially committed, exactly once") {
+    // Earlier sinks split a batch with repartition(n, cols) and wrote
+    // one ledger row per partition id; the bucket pmod(hash(cols), n)
+    // must be that same id, so their part_ids still skip on replay.
+    import org.apache.spark.sql.functions.{col, hash, lit, pmod, spark_partition_id}
+    val n = 16
+    val batch = (1 to 200).map(i => (i, s"v$i")).toDF("k", "v")
+    val cols = batch.columns.map(col).toSeq
+    val bucket = pmod(hash(cols: _*), lit(n))
+    assert(batch.repartition(n, cols: _*)
+      .filter(bucket =!= spark_partition_id()).count() == 0)
+
     val conn = java.sql.DriverManager.getConnection(url)
-    conn.createStatement().execute(
-      "CREATE TABLE outbox_data (k INT, v DOUBLE)")
-    conn.close()
-    val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val hookKey = "outbox-crash-once"
-    graft.streaming.JdbcOutboxSink.crashHooks(hookKey) = (_, pid) =>
-      if (pid == 2 && crashed.compareAndSet(false, true))
-        throw new RuntimeException("injected crash: after data, before ledger")
-    val sink = new graft.streaming.JdbcOutboxSink(url, "outbox_data",
-      numPartitions = 4, crashHookKey = Some(hookKey))
-    val batch = (1 to 100).map(i => (i, i * 0.5)).toDF("k", "v")
+    try {
+      conn.createStatement().execute("CREATE TABLE compat_data (k INT, v VARCHAR(8))")
+      conn.createStatement().execute("CREATE TABLE compat_ledger (batch_id BIGINT NOT NULL, " +
+        "part_id INT NOT NULL, n_rows BIGINT NOT NULL, PRIMARY KEY (batch_id, part_id))")
+      // buckets {0, 1} committed the way the per-partition sink did:
+      // their rows plus one ledger row each, in one transaction
+      conn.setAutoCommit(false)
+      val done = batch.withColumn("b", bucket).filter(col("b") < 2).collect()
+      val ins = conn.prepareStatement("INSERT INTO compat_data (k, v) VALUES (?, ?)")
+      done.foreach { r => ins.setInt(1, r.getInt(0)); ins.setString(2, r.getString(1)); ins.addBatch() }
+      ins.executeBatch()
+      val led = conn.prepareStatement("INSERT INTO compat_ledger VALUES (5, ?, ?)")
+      done.groupBy(_.getInt(2)).foreach { case (b, rs) =>
+        led.setInt(1, b); led.setLong(2, rs.length); led.addBatch()
+      }
+      led.executeBatch()
+      conn.commit()
+      assert(done.map(_.getInt(2)).toSet == Set(0, 1))
+    } finally conn.close()
 
-    intercept[Exception] { sink.write(batch, 7L) } // the "process death"
-    assert(crashed.get, "crash hook never fired")
-    val afterCrash = spark.read.jdbc(url, "outbox_data", props)
-    // partition 2's rows rolled back with its ledger row — no orphans
-    assert(afterCrash.count() < 100, "crashed partition's rows leaked past rollback")
-
-    sink.write(batch, 7L) // restart replays the same batchId
-    val after = spark.read.jdbc(url, "outbox_data", props)
-    assert(after.count() == 100)
-    assert(after.select("K").distinct().count() == 100, "a committed partition re-delivered")
-
-    sink.write(batch, 7L) // full-batch replay: every partition skips
-    assert(spark.read.jdbc(url, "outbox_data", props).count() == 100)
-    sink.write(batch.filter($"k" <= 10), 8L) // a NEW batch still appends
-    assert(spark.read.jdbc(url, "outbox_data", props).count() == 110)
-
-    // retention (VERDICT r5 item 6): prune ledger rows below batch 8;
-    // batch 8, inside the retention window, must still skip on replay
-    assert(sink.pruneLedger(8L) > 0, "batch-7 ledger rows not pruned")
-    sink.write(batch.filter($"k" <= 10), 8L)
-    assert(spark.read.jdbc(url, "outbox_data", props).count() == 110,
-      "a batch inside the retention window re-delivered after pruning")
+    val sink = new graft.streaming.JdbcOutboxSink(url, "compat_data",
+      ledgerTable = "compat_ledger", numPartitions = n)
+    sink.write(batch, 5L)
+    val back = spark.read.jdbc(url, "compat_data", props)
+    assert(back.count() == 200)
+    assert(back.select("K").distinct().count() == 200, "a committed bucket re-delivered")
   }
 
   test("PostGIS boundary: the reference's exact INSERT template executes against the sink") {
